@@ -52,3 +52,48 @@ def test_batch_write_is_idempotent_on_replay(spark):
         assert got == [0, 1, 2, 3, 4, 100, 101, 102]
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_continuous_mode_runs_until_stopped(spark, tmp_path):
+    """``available_now=False`` must start both queries on the default
+    trigger (it used to call ``.trigger()`` with no arguments, which
+    raises), keep committing batches, and return once stopped."""
+    import os
+    import sys
+    import threading
+    import time
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from perfbench import gen_osm
+
+    osm, psi = str(tmp_path / "city.osm"), str(tmp_path / "streets.xml")
+    shards, out = str(tmp_path / "shards"), str(tmp_path / "out")
+    gen_osm.generate(3, osm, psi, nodes=600)
+    osm_split.split_osm_xml(osm, shards, target_bytes=32 * 1024)
+
+    errors: list[Exception] = []
+
+    def run():
+        try:
+            osm_etl_stream.run_streaming_etl(spark, shards, psi, out, available_now=False)
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+
+    runner = threading.Thread(target=run, daemon=True)
+    runner.start()
+    committed = [f"{out}/_ckpt_{q}/commits/0" for q in ("nodes", "ways")]
+    deadline = time.monotonic() + 180
+    while time.monotonic() < deadline and not errors:
+        if all(os.path.exists(c) for c in committed):
+            break
+        time.sleep(0.5)
+    try:
+        assert not errors, errors
+        assert all(os.path.exists(c) for c in committed)
+        assert runner.is_alive()  # continuous: still running after a batch
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        runner.join(120)
+    assert not runner.is_alive() and not errors, errors
+    assert spark.read.parquet(f"{out}/ways").count() > 0

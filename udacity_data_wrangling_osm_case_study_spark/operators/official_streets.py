@@ -57,18 +57,36 @@ def clean_official_streets(raw: DataFrame, apply_corrections: bool = True) -> Da
 
 
 def name_lookup_table(official: DataFrame) -> DataFrame:
-    """Melt both language columns into one probe table ``(name, idx)`` —
-    the broadcast build side of J1 (reference ``create_lookups``,
-    parse_clean_and_csv.py:358-374, keys one dict by both languages).
+    """The ``(name, idx)`` probe table of the audits' J1 — the
+    :func:`name_dimension` without the canonical names."""
+    return name_dimension(official).select("name", "idx")
+
+
+def name_dimension(official: DataFrame) -> DataFrame:
+    """Melt both language columns into one probe dimension ``(name,
+    idx, eng, chi)`` — the broadcast build side of J1 (reference
+    ``create_lookups``, parse_clean_and_csv.py:358-374, keys one dict by
+    both languages). It carries the matched row's canonical names, so
+    one broadcast probe answers both "which row" and "what to write".
 
     One idx per name, like the dict: a name that lands twice (e.g. a
     typo correction colliding with an existing row, or a cross-language
     homonym) is collapsed to a single winner, mirroring the reference's
-    dict-overwrite — otherwise the repair join would count 2 matches
-    and skip a way the reference repairs. The winner is max(idx)
-    (deterministic surrogate) where the reference keeps last list
-    order; both are arbitrary picks among colliding rows (documented
-    divergence, no collision exists in the shipped sample)."""
-    eng = official.select(F.col("eng").alias("name"), "idx")
-    chi = official.select(F.col("chi").alias("name"), "idx")
-    return eng.unionByName(chi).groupBy("name").agg(F.max("idx").alias("idx"))
+    dict-overwrite — otherwise the repair would count 2 matches and
+    skip a way the reference repairs. The winner is max(idx)
+    (deterministic surrogate; rows sharing an idx share their names)
+    where the reference keeps last list order; both are arbitrary picks
+    among colliding rows (documented divergence, no collision exists in
+    the shipped sample)."""
+    row = F.struct("idx", "eng", "chi")
+    eng = official.select(F.col("eng").alias("name"), row.alias("r"))
+    chi = official.select(F.col("chi").alias("name"), row.alias("r"))
+    return (
+        eng.unionByName(chi)
+        .groupBy("name")
+        .agg(F.max("r").alias("r"))
+        .select("name", "r.idx", "r.eng", "r.chi")
+        # a few thousand rows: one partition, so materializing and
+        # broadcasting it runs one task, not one per shuffle partition
+        .coalesce(1)
+    )

@@ -4,8 +4,9 @@ Spark rendering of the reference's ``process_map`` single pass
 (parse_clean_and_csv.py:206-290,536-539). The reference fuses
 shape→clean→write into one loop; here each stage is a declarative frame
 and Catalyst fuses the narrow ones. The multi-sink economics differ on
-purpose (SURVEY.md §4): the shared upstream (shaped + cleaned tags) is
-persisted once so the six sinks don't re-scan the XML.
+purpose (SURVEY.md §4): what the sinks share (the node parse, the
+street-name dimension and the repaired ways) is persisted once so the
+six sinks don't re-scan the XML.
 """
 
 from __future__ import annotations
@@ -35,21 +36,36 @@ def build_tables(
     """Returns the 6-table dict: nodes, nodes_tags, ways, ways_nodes,
     ways_tags, update_history.
 
-    ``persist`` pins the two raw XML parses (and the dimension table):
-    six sinks otherwise re-parse the XML per action — the multi-sink
-    economics of SURVEY.md §4. ``shard_dir`` routes the input through
-    the element-aligned splitter first (sources/osm_split.py): Spark's
-    XML source doesn't split within one file, so sharding is what makes
-    the parse scale with cores/executors.
+    ``persist`` pins exactly what the sinks share, or six sinks
+    re-parse the XML per action — the multi-sink economics of
+    SURVEY.md §4:
+
+    - the node parse (nodes, nodes_tags, the node phone CDC);
+    - the street-name dimension, materialized on the spot: it is the
+      build side of the repair's four broadcast probes;
+    - the repaired ways (:func:`street_repair.repair_street_names`),
+      which every way sink reads — ways, ways_nodes, ways_tags and
+      both way CDC feeds. The raw way parse feeds only the repair, so
+      it is read once and not pinned.
+
+    Nothing else is cached: shaping, phone fixing and the repair are
+    row-local, so no sink shuffles the way facts.
+
+    ``shard_dir`` routes the input through the element-aligned splitter
+    first (sources/osm_split.py): Spark's XML source doesn't split
+    within one file, so sharding is what makes the parse scale with
+    cores/executors.
 
     ``stage_dir`` (mutually composable with ``persist=False``) swaps
-    the block-manager cache for PARQUET STAGING: each raw parse is
-    written once to ``{stage_dir}/<name>`` and read back, so the six
-    sinks share the parse through the filesystem instead of executor
-    storage. This is the city-scale-and-up memory posture: the
-    round-9 100x run peaked at 11.0 GB tree RSS (~27x the input)
-    because the cached raw parses (nested tag arrays, columnar
-    batches) plus six concurrent sink jobs all lived in one heap, and
+    the block-manager cache for PARQUET STAGING: the same three frames
+    (node parse, dimension, repaired ways) are written once to
+    ``{stage_dir}/<name>`` and read back, so the six sinks share them
+    through the filesystem instead of executor storage (``persist=False``
+    without ``stage_dir`` shares nothing and recomputes per sink). This
+    is the city-scale-and-up memory posture: the round-9 100x run
+    peaked at 11.0 GB tree RSS (~27x the input) because the cached raw
+    parses (nested tag arrays, columnar batches) plus six concurrent
+    sink jobs all lived in one heap, and
     at corpus scale a cache of input-sized frames only guarantees
     eviction churn. Staged parses cost two extra file round-trips but
     bound executor storage at zero, prune columns on every downstream
@@ -74,7 +90,7 @@ def build_tables(
     official = official_streets.clean_official_streets(
         osm_xml.read_official_streets_raw(spark, psi_path)
     )
-    lookup = official_streets.name_lookup_table(official)
+    names = official_streets.name_dimension(official)
 
     nodes_raw = osm_xml.read_nodes_raw(spark, osm_path)
     ways_raw = osm_xml.read_ways_raw(spark, osm_path)
@@ -93,37 +109,35 @@ def build_tables(
         return spark.read.parquet(f"{stage_dir}/{name}")
 
     if stage_dir is not None:
-        # One parse per rowTag, shared through the filesystem — the
+        # One node parse, shared through the filesystem — the
         # bounded-memory posture (see docstring).
         nodes_raw = _stage(nodes_raw, "nodes_raw")
-        ways_raw = _stage(ways_raw, "ways_raw")
-        official = _stage(official, "official")
-        lookup = official_streets.name_lookup_table(official)
+        names = _stage(names, "names")
     elif persist:
-        # One parse per rowTag, shared by every downstream sink.
+        # One node parse, shared by every node sink; the dimension is
+        # materialized now so the four repair probes broadcast it from
+        # storage instead of re-running its shuffles.
         nodes_raw = nodes_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        ways_raw = ways_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        official = official.persist(StorageLevel.MEMORY_AND_DISK)
+        names = names.persist(StorageLevel.MEMORY_AND_DISK)
+        names.count()
 
     nodes = shape.shape_nodes(nodes_raw)
-    ways = shape.shape_ways(ways_raw)
-    ways_nodes = shape.shape_way_nodes(ways_raw)
-
     nodes_tags, node_phone_ids = cleaning.fix_phones_in_tags(
         shape.shape_tags(nodes_raw)
     )
-    ways_tags_pos, way_phone_ids = cleaning.fix_phones_in_tags(
-        shape.shape_tags(ways_raw, with_pos=True)
-    )
-    if stage_dir is not None:
-        ways_tags_pos = _stage(ways_tags_pos, "ways_tags_pos")
-    elif persist:
-        # Shared by the repair join, the presence scan, and two sinks.
-        ways_tags_pos = ways_tags_pos.persist(StorageLevel.MEMORY_AND_DISK)
 
-    ways_tags, way_name_ids = street_repair.repair_street_names(
-        ways_tags_pos, lookup, official, ways_raw=ways_raw
-    )
+    # The repaired ways are the one way frame every way sink reads, so
+    # the raw way parse itself is read once and never pinned.
+    ways_fixed, way_name_ids = street_repair.repair_street_names(ways_raw, names)
+    if stage_dir is not None:
+        ways_fixed = _stage(ways_fixed, "ways_repaired")
+        way_name_ids = street_repair.changed_ids(ways_fixed)
+    elif persist:
+        ways_fixed = ways_fixed.persist(StorageLevel.MEMORY_AND_DISK)
+
+    ways = shape.shape_ways(ways_fixed)
+    ways_nodes = shape.shape_way_nodes(ways_fixed)
+    ways_tags, way_phone_ids = cleaning.fix_phones_in_tags(shape.shape_tags(ways_fixed))
     history = cleaning.update_history(node_phone_ids, way_phone_ids, way_name_ids)
 
     tables = {

@@ -8,27 +8,30 @@ Parity target: ``is_street`` / ``get_street_names`` / ``name_look_up`` /
 2. A5 variant pivot: up to 4 name variants per way — ``name:en``,
    ``name:zh``, and the English/Chinese runs regex-split out of the
    combined ``name`` value. The reference builds a per-way dict, so a
-   repeated variant keeps the LAST tag ("dict overwrite") — reproduced
-   here with ``max_by(value, pos)``.
+   repeated variant keeps the LAST tag ("dict overwrite").
 3. J1 broadcast lookup: probe every variant into the official list
-   keyed by BOTH languages; per way, collect the set of matched rows
-   and count misses.
+   keyed by BOTH languages; per way, collect the set of matched rows.
 4. Exactly-one-match gate: only an unambiguous way is repaired.
 5. F5 overwrite-or-insert: set ``name:en`` / ``name:zh`` / ``name``
    (= ``chi + ' ' + eng``) to the canonical values, appending any
    missing tag; flag the way as updated if anything changed.
 
-Scale shape: the official list is a few-thousand-row dimension →
-broadcast hash join (no shuffle on the fact side). The only shuffles
-are the per-way aggregations on ``id``, which AQE coalesces; the
-canonical-names frame joins back to the tags fact on ``id`` and scales
-with the data, so it is a plain shuffled hash join, never collected to
-the driver.
+Scale shape: like the reference's per-element loop, the repair is
+row-local. Every <way> row carries its whole ``tag`` array, so
+:func:`repair_street_names` runs all five steps on that array: the
+gate and the last-wins picks are array expressions, the four probes
+are broadcast hash joins against the name dimension
+(:func:`official_streets.name_dimension`, a few thousand rows), and the
+overwrite/append and the changed flag are one ``transform``/``concat``
+per way. The fact side is never exchanged: no groupBy, no shuffled
+join, no re-join of the exploded tags. The EAV helpers below
+(:func:`street_ids`, :func:`street_name_variants`,
+:func:`match_variants`) serve the audits, which report per variant.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.functions import names as N
@@ -41,16 +44,21 @@ STREET_VALUES = [
     "road", "steps", "path",
 ]
 
-def _is_en():
-    return (F.col("type") == "name") & (F.col("key") == "en")
+# Per-way flag column of the repaired frame: did any name tag change?
+CHANGED = "_name_changed"
 
+# The name variants, in probe order.
+VARIANTS = ("en_only", "zh_only", "reg_eng", "reg_chi")
 
-def _is_zh():
-    return (F.col("type") == "name") & (F.col("key") == "zh")
-
-
-def _is_reg():
-    return (F.col("type") == "regular") & (F.col("key") == "name")
+# Raw tag keys of the three name shapes the repair writes, keyed by the
+# raw key it appends when the shape is missing. The shaped tables see
+# (type, key) after the first-colon split, under which 'regular:name'
+# is indistinguishable from a plain 'name' — so both count as present.
+_SHAPE_KEYS = {
+    "name:en": ("name:en",),
+    "name:zh": ("name:zh",),
+    "name": ("name", "regular:name"),
+}
 
 
 def street_ids(ways_tags: DataFrame) -> DataFrame:
@@ -71,13 +79,15 @@ def street_name_variants(ways_tags_pos: DataFrame) -> DataFrame:
     (dict-overwrite parity: last tag of a shape wins).
     """
     t = ways_tags_pos.join(street_ids(ways_tags_pos), "id", "left_semi")
-    en = t.filter(_is_en()).select(
+    is_en = (F.col("type") == "name") & (F.col("key") == "en")
+    is_zh = (F.col("type") == "name") & (F.col("key") == "zh")
+    reg = t.filter((F.col("type") == "regular") & (F.col("key") == "name"))
+    en = t.filter(is_en).select(
         "id", F.lit("en_only").alias("variant"), F.col("value").alias("name"), "pos"
     )
-    zh = t.filter(_is_zh()).select(
+    zh = t.filter(is_zh).select(
         "id", F.lit("zh_only").alias("variant"), F.col("value").alias("name"), "pos"
     )
-    reg = t.filter(_is_reg())
     reg_eng = reg.select(
         "id",
         F.lit("reg_eng").alias("variant"),
@@ -94,32 +104,28 @@ def street_name_variants(ways_tags_pos: DataFrame) -> DataFrame:
     return melted.groupBy("id", "variant").agg(F.max_by("name", "pos").alias("name"))
 
 
-def street_name_variants_raw(ways_raw: DataFrame) -> DataFrame:
-    """A5 computed ROW-LOCALLY on the raw nested tag arrays — same
-    output as :func:`street_name_variants`, zero shuffle.
-
-    Every way element carries its whole tag array, so the street gate
-    (exists), the last-wins variant picks, and the regex extractions
-    are all array expressions on the way row; only the handful of
-    street ways then explode into (id, variant, name). At scale this
-    removes two groupBy shuffles and several passes over the exploded
-    EAV frame (the raw key forms are exact: 'name:en'/'name:zh' are the
-    only keys that first-colon-split to (name, en/zh); 'name' is the
-    only colon-free 'name' key — and none contain problem chars, so
-    the P2 filter cannot affect them).
-    """
-    tag = F.col("tag")
-    is_street = F.exists(
-        tag,
-        lambda t: (t["_k"] == "highway") & t["_v"].isin(STREET_VALUES),
+def _is_street(tag: Column) -> Column:
+    return F.exists(
+        tag, lambda t: (t["_k"] == "highway") & t["_v"].isin(STREET_VALUES)
     )
-    streets = ways_raw.filter(tag.isNotNull() & is_street)
 
-    def last_value(key: str):
+
+def _has_key(tag: Column, raw_keys: tuple[str, ...]) -> Column:
+    return F.exists(tag, lambda t: t["_k"].isin(*raw_keys))
+
+
+def _variant_names(tag: Column) -> dict[str, Column]:
+    """A5 on one way's raw tag array: variant -> last-wins name (NULL
+    when absent). The raw keys are exact: 'name:en'/'name:zh' are the
+    only keys that first-colon-split to (name, en/zh), and none of the
+    name keys contain problem chars, so the P2 filter cannot affect
+    them."""
+
+    def last_value(key: str) -> Column:
         vals = F.filter(tag, lambda t: t["_k"] == key)
         return F.try_element_at(vals, F.lit(-1))["_v"]
 
-    def last_extract(extract_fn):
+    def last_extract(extract_fn) -> Column:
         reg_vals = F.transform(
             F.filter(tag, lambda t: t["_k"] == "name"),
             lambda t: extract_fn(t["_v"]),
@@ -127,20 +133,29 @@ def street_name_variants_raw(ways_raw: DataFrame) -> DataFrame:
         non_null = F.filter(reg_vals, lambda x: x.isNotNull())
         return F.try_element_at(non_null, F.lit(-1))
 
+    return {
+        "en_only": last_value("name:en"),
+        "zh_only": last_value("name:zh"),
+        "reg_eng": last_extract(N.extract_english_name),
+        "reg_chi": last_extract(N.extract_chinese_name),
+    }
+
+
+def street_name_variants_raw(ways_raw: DataFrame) -> DataFrame:
+    """A5 computed ROW-LOCALLY on the raw nested tag arrays — same
+    output as :func:`street_name_variants`, zero shuffle: only the
+    street ways explode into (id, variant, name)."""
+    tag = F.col("tag")
+    picks = _variant_names(tag)
     variants = F.array(
-        F.struct(F.lit("en_only").alias("variant"), last_value("name:en").alias("name")),
-        F.struct(F.lit("zh_only").alias("variant"), last_value("name:zh").alias("name")),
-        F.struct(
-            F.lit("reg_eng").alias("variant"),
-            last_extract(N.extract_english_name).alias("name"),
-        ),
-        F.struct(
-            F.lit("reg_chi").alias("variant"),
-            last_extract(N.extract_chinese_name).alias("name"),
-        ),
+        *(
+            F.struct(F.lit(v).alias("variant"), picks[v].alias("name"))
+            for v in VARIANTS
+        )
     )
     return (
-        streets.select(
+        ways_raw.filter(tag.isNotNull() & _is_street(tag))
+        .select(
             F.expr("try_cast(_id AS bigint)").alias("id"),
             F.explode(variants).alias("v"),
         )
@@ -160,109 +175,82 @@ def match_variants(variants: DataFrame, lookup: DataFrame) -> DataFrame:
     )
 
 
-def canonical_names(matched: DataFrame, official: DataFrame) -> DataFrame:
-    """Exactly-one-match gate + J3 back-join: (id, eng, chi, reg)."""
-    one = matched.filter(F.size("matches") == 1).select(
-        "id", F.col("matches")[0].alias("idx")
-    )
-    return one.join(F.broadcast(official), "idx").select(
-        "id",
-        "eng",
-        "chi",
-        F.concat(F.col("chi"), F.lit(" "), F.col("eng")).alias("reg"),
-    )
-
-
 def repair_street_names(
-    ways_tags_pos: DataFrame,
-    lookup: DataFrame,
-    official: DataFrame,
-    ways_raw: DataFrame | None = None,
+    ways_raw: DataFrame, names: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """F5 overwrite-or-insert. Returns ``(repaired_tags, updated_ids)``.
+    """F5 overwrite-or-insert on the raw way rows. Returns
+    ``(repaired, name_ids)``.
 
-    ``repaired_tags`` has columns (id, key, value, type);
-    ``updated_ids`` has one ``id`` row per way whose names changed —
-    the 'name' CDC feed (S4). When ``ways_raw`` is provided, variants
-    come from the shuffle-free row-local path
-    (:func:`street_name_variants_raw`).
+    ``names`` is the ``(name, idx, eng, chi)`` dimension of
+    :func:`official_streets.name_dimension`; materialize it once
+    before calling (it is the build side of four broadcasts).
+    ``repaired`` is ``ways_raw`` with each uniquely-matched street
+    way's ``tag`` array rewritten, plus the boolean :data:`CHANGED`
+    column; ``name_ids`` (:func:`changed_ids`) has one ``id`` row per
+    changed way — the 'name' CDC feed (S4). Both read ``repaired``, so
+    a caller that caches ``repaired`` runs the probes once.
     """
-    variants = (
-        street_name_variants_raw(ways_raw)
-        if ways_raw is not None
-        else street_name_variants(ways_tags_pos)
+    tag = F.col("tag")
+    picks = _variant_names(tag)
+    street = tag.isNotNull() & _is_street(tag)
+    cols = ways_raw.columns
+    probed = ways_raw.select(
+        *cols,
+        *(F.when(street, picks[v]).alias(f"_probe_{v}") for v in VARIANTS),
     )
-    # canon feeds three plan branches (overwrite join, presence
-    # semi-join, gap synthesis) and the CDC count; Spark has no
-    # common-subplan sharing across branches, so without a persist the
-    # variants→match→back-join chain executes once per branch. canon is
-    # one small row per uniquely-matched street way — cache it.
-    canon = canonical_names(match_variants(variants, lookup), official).cache()
-
-    j = ways_tags_pos.join(canon, "id", "left")
-    new_value = (
-        F.when(F.col("eng").isNotNull() & _is_en(), F.col("eng"))
-        .when(F.col("chi").isNotNull() & _is_zh(), F.col("chi"))
-        .when(F.col("reg").isNotNull() & _is_reg(), F.col("reg"))
-        .otherwise(F.col("value"))
+    # J1: one broadcast hash join per variant; NULL probes never match.
+    # Each join broadcasts the materialized one-partition dimension: a
+    # one-task job, no exchange on the way side.
+    dim = F.broadcast(
+        names.select(F.col("name").alias("_dim"), F.struct("idx", "eng", "chi").alias("_hit"))
     )
-    overwritten = j.select(
-        "id",
-        "key",
-        new_value.alias("value"),
-        "type",
-        (~new_value.eqNullSafe(F.col("value"))).alias("_changed"),
-    )
-
-    # Which of the 3 name shapes already exist on each canonical way?
-    presence = (
-        ways_tags_pos.join(canon.select("id"), "id", "left_semi")
-        .groupBy("id")
-        .agg(
-            F.max(F.when(_is_en(), 1).otherwise(0)).alias("has_en"),
-            F.max(F.when(_is_zh(), 1).otherwise(0)).alias("has_zh"),
-            F.max(F.when(_is_reg(), 1).otherwise(0)).alias("has_reg"),
+    for v in VARIANTS:
+        probed = probed.join(dim, F.col(f"_probe_{v}") == F.col("_dim"), "left").select(
+            *probed.columns, F.col("_hit").alias(f"_hit_{v}")
+        )
+    hits = F.array_distinct(
+        F.filter(
+            F.array(*(F.col(f"_hit_{v}") for v in VARIANTS)), lambda h: h.isNotNull()
         )
     )
-    gaps = canon.join(presence, "id", "left")
-    # One row-local explode instead of three filter/select/union branches:
-    # each canonical way emits the (key, value, type) rows whose name
-    # shape is absent — identical rows, one plan node, no re-scan per
-    # shape.
-    candidates = F.array(
+    canon = F.when(F.size(hits) == 1, hits[0])  # exactly-one-match gate
+
+    eng, chi = canon["eng"], canon["chi"]
+    values = {"name:en": eng, "name:zh": chi, "name": N.combined_name(chi, eng)}
+
+    def overwrite(t: Column) -> Column:
+        v = t["_v"]
+        for shape, raw_keys in _SHAPE_KEYS.items():
+            v = F.when(t["_k"].isin(*raw_keys), values[shape]).otherwise(v)
+        return t.withField("_v", v)
+
+    appends = F.array(
         *(
             F.struct(
-                (F.coalesce(F.col(flag), F.lit(0)) == 0).alias("missing"),
-                F.lit(key).alias("key"),
-                F.col(src).alias("value"),
-                F.lit(typ).alias("type"),
+                _has_key(tag, raw_keys).alias("present"),
+                F.struct(F.lit(shape).alias("_k"), values[shape].alias("_v")).alias("t"),
             )
-            for flag, key, typ, src in (
-                ("has_en", "en", "name", "eng"),
-                ("has_zh", "zh", "name", "chi"),
-                ("has_reg", "name", "regular", "reg"),
-            )
+            for shape, raw_keys in _SHAPE_KEYS.items()
         )
     )
-    appended = gaps.select(
-        "id",
-        F.explode(F.filter(candidates, lambda c: c["missing"])).alias("c"),
-    ).select(
-        "id",
-        F.col("c.key").alias("key"),
-        F.col("c.value").alias("value"),
-        F.col("c.type").alias("type"),
-        F.lit(True).alias("_changed"),
+    missing = F.transform(F.filter(appends, lambda a: ~a["present"]), lambda a: a["t"])
+    new_tag = (
+        F.when(canon.isNotNull(), F.concat(F.transform(tag, overwrite), missing))
+        .otherwise(tag)
     )
+    fixed = probed.select(*cols, new_tag.alias("_new_tag"))
+    # The flag compares whole arrays in a later projection, so it sees
+    # exactly the array the sinks will read.
+    repaired = fixed.select(
+        *(F.col("_new_tag").alias("tag") if c == "tag" else F.col(c) for c in cols),
+        (~F.col("_new_tag").eqNullSafe(F.col("tag"))).alias(CHANGED),
+    )
+    return repaired, changed_ids(repaired)
 
-    # all_tags feeds both the repaired-tags sink and the CDC updated-ids
-    # aggregate — cache so the overwrite/append work runs once.
-    all_tags = overwritten.unionByName(appended).cache()
-    repaired = all_tags.select("id", "key", "value", "type")
-    updated_ids = (
-        all_tags.groupBy("id")
-        .agg(F.max(F.col("_changed").cast("int")).alias("_u"))
-        .filter(F.col("_u") == 1)
-        .select("id")
+
+def changed_ids(repaired: DataFrame) -> DataFrame:
+    """The 'name' CDC ids of a repaired frame: one ``id`` row per way
+    whose tags the repair changed."""
+    return repaired.filter(F.col(CHANGED)).select(
+        F.expr("try_cast(_id AS bigint)").alias("id")
     )
-    return repaired, updated_ids

@@ -10,8 +10,9 @@ aligned shards (sources/osm_split.py makes them):
 - Phone cleaning is stateless → identical column expression.
 - Street-name repair is per-way (every <way> carries its whole tag
   array in one element), so it is micro-batch-local by construction —
-  ``foreachBatch`` reuses the exact batch operators with the static
-  broadcast dimension table (stream-static join pattern). No cross-
+  ``foreachBatch`` calls the batch ETL's row-local
+  ``repair_street_names`` on the raw way batch, probing the static
+  broadcast name dimension (stream-static join pattern). No cross-
   batch state, no watermark needed for correctness.
 
 Each micro-batch writes the same parquet tables the batch ETL writes —
@@ -73,13 +74,16 @@ def run_streaming_etl(
     """Stream shards → the 5-table model + CDC, appending parquet.
 
     ``available_now=True`` drains whatever shards exist and stops
-    (test/backfill mode); False runs continuously.
+    (test/backfill mode); False runs continuously on the default
+    micro-batch trigger until the queries are stopped (e.g. through
+    ``spark.streams.active``).
     """
-    official = official_streets.clean_official_streets(
-        osm_xml.read_official_streets_raw(spark, psi_path)
+    names = official_streets.name_dimension(
+        official_streets.clean_official_streets(
+            osm_xml.read_official_streets_raw(spark, psi_path)
+        )
     ).cache()
-    official.count()  # materialize once; broadcast into every batch
-    lookup = official_streets.name_lookup_table(official)
+    names.count()  # materialize once; broadcast into every batch
 
     nodes_stream = _read_stream(spark, shard_dir, "node", schemas.OSM_NODE_SCHEMA)
     ways_stream = _read_stream(spark, shard_dir, "way", schemas.OSM_WAY_SCHEMA)
@@ -103,13 +107,9 @@ def run_streaming_etl(
     def process_ways(batch: DataFrame, batch_id: int) -> None:
         _write(shape.shape_ways(batch), "ways", batch_id, "w")
         _write(shape.shape_way_nodes(batch), "ways_nodes", batch_id, "w")
-        tags_pos, phone_ids = cleaning.fix_phones_in_tags(
-            shape.shape_tags(batch, with_pos=True)
-        )
-        repaired, name_ids = street_repair.repair_street_names(
-            tags_pos, lookup, official
-        )
-        _write(repaired, "ways_tags", batch_id, "w")
+        repaired, name_ids = street_repair.repair_street_names(batch, names)
+        tags, phone_ids = cleaning.fix_phones_in_tags(shape.shape_tags(repaired))
+        _write(tags, "ways_tags", batch_id, "w")
         empty = phone_ids.limit(0)
         _write(
             cleaning.update_history(empty, phone_ids, name_ids),
@@ -118,16 +118,18 @@ def run_streaming_etl(
             "w",
         )
 
-    trigger = {"availableNow": True} if available_now else {}
+    def _start(stream: DataFrame, process, name: str):
+        writer = (
+            stream.writeStream.foreachBatch(process)
+            .option("checkpointLocation", f"{out_dir}/_ckpt_{name}")
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
     queries = [
-        nodes_stream.writeStream.foreachBatch(process_nodes)
-        .option("checkpointLocation", f"{out_dir}/_ckpt_nodes")
-        .trigger(**trigger)
-        .start(),
-        ways_stream.writeStream.foreachBatch(process_ways)
-        .option("checkpointLocation", f"{out_dir}/_ckpt_ways")
-        .trigger(**trigger)
-        .start(),
+        _start(nodes_stream, process_nodes, "nodes"),
+        _start(ways_stream, process_ways, "ways"),
     ]
     for q in queries:
         q.awaitTermination()
